@@ -1281,11 +1281,8 @@ def staging_subq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_job_spark.sql import execute_dml
     from etl_job_spark.table import ManifestTable
 
-    path = scratch_dir(
-        spark, "kicc_staging_subq_delete",
-        f"_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
-    )
-    t = ManifestTable(path)
+    suffix = f"_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
+    t = ManifestTable(scratch_dir(spark, "kicc_staging_subq_delete", suffix))
     if t.latest_version() is None:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice"
@@ -1295,7 +1292,9 @@ def staging_subq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
                 8, F.col("o_orderkey")
             )
         )
-        mart = ManifestTable(path + "_dim")
+        mart = ManifestTable(
+            scratch_dir(spark, "kicc_staging_subq_delete", suffix + "_dim")
+        )
         mart.overwrite(orders.filter("o_orderkey % 100 = 0").select("o_orderkey"))
 
         def resolve(name):

@@ -93,7 +93,7 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from etl_job_spark.commit_store import (
     CommitStore,
@@ -2065,34 +2065,49 @@ def _align(
     tables with RENAMED columns — resolve each logical field from its
     PHYSICAL name in the files (``column_map``: logical → physical,
     Delta's column-mapping shape: a rename changes only this map;
-    every file, old and new, keeps storing the physical name)."""
+    every file, old and new, keeps storing the physical name). A frame
+    already in that shape is returned unchanged, with no projection."""
     cmap = column_map or {}
+    have = {f.name: f.dataType for f in df.schema.fields}
+    names = [f.name for f in schema.fields]
+    if (
+        df.columns == names
+        and all(cmap.get(n, n) == n for n in names)
+        and all(have[f.name] == f.dataType for f in schema.fields)
+    ):
+        return df
     return df.select(
         *[
             F.col(cmap.get(f.name, f.name)).cast(f.dataType).alias(f.name)
-            if cmap.get(f.name, f.name) in df.columns
+            if cmap.get(f.name, f.name) in have
             else F.lit(None).cast(f.dataType).alias(f.name)
             for f in schema.fields
         ]
     )
 
 
-def _null_fill_missing(df: DataFrame, schema: StructType | None) -> DataFrame:
-    """Add NULL columns for committed-schema fields the frame lacks,
-    keeping every existing column (planner columns like ``__file``
-    included) — what lets a predicate over a METADATA-ONLY added
-    column (``alter_schema(add=...)``) resolve against a scan of files
-    written before the column existed. ``_align`` is the projection
-    form (exact schema, planner columns dropped); this is the
-    additive form for discovery scans that must keep their markers."""
-    if schema is None:
-        return df
-    have = set(df.columns)
-    missing = [f for f in schema.fields if f.name not in have]
-    if not missing:
-        return df
-    return df.select(
-        "*", *[F.lit(None).cast(f.dataType).alias(f.name) for f in missing]
+def _read_schema(
+    schema: StructType, column_map: dict[str, str] | None, hive: Sequence[str]
+) -> StructType:
+    """The scan schema of one write batch, built from the committed
+    schema so the reader never opens a footer to infer one: every
+    committed field under its PHYSICAL name (``column_map``) with its
+    committed type — the parquet reader NULL-fills a field the batch's
+    files predate and widens a narrower stored type — and the batch's
+    hive directory keys (``hive``) as strings, so every partition
+    column is typed here and no partition type inference runs (the
+    string-in-the-log / cast-on-read contract; ``_align`` casts).
+    Field metadata is dropped and every field is nullable, as a file
+    scan presents them."""
+    cmap = column_map or {}
+    fields = [
+        StructField(p, StringType() if p in hive else f.dataType)
+        for f in schema.fields
+        for p in [cmap.get(f.name, f.name)]
+    ]
+    have = {f.name for f in fields}
+    return StructType(
+        fields + [StructField(k, StringType()) for k in hive if k not in have]
     )
 
 
@@ -2325,7 +2340,11 @@ class ManifestTable:
 
         The returned plan references the manifest's files directly, so
         it stays valid while newer versions commit — time travel is
-        just passing an older ``version``.
+        just passing an older ``version``. Building it is driver-only
+        metadata work: the scan schema comes from the manifest's
+        committed ``fields`` and ``column_map`` (``_read_files``), so no
+        Spark job runs until the caller acts on the frame. Only a
+        manifest without ``fields`` infers its schema from the files.
         """
         if version is None:
             version = self.latest_version()
@@ -2335,14 +2354,13 @@ class ManifestTable:
         schema = self._manifest_schema(man)
         if not man["files"]:
             return spark.createDataFrame([], schema or man["schema"])
-        df = self._read_files(spark, man["files"])
+        df = self._read_files(spark, man["files"], man)
         if schema is None:
             return df
-        # present the committed (evolved) schema: stable column order,
-        # NULL for columns added after a file was written, renamed
-        # columns resolved from their physical names, and partition
-        # columns (read back as strings — see _read_files) cast to
-        # their committed types
+        # present the committed (evolved) schema: renamed columns
+        # resolved from their physical names, and partition columns
+        # (read back as strings — see _read_files) cast to their
+        # committed types and moved to their committed positions
         return _align(df, schema, man.get("column_map"))
 
     def version_as_of(self, timestamp: str) -> int:
@@ -2516,7 +2534,7 @@ class ManifestTable:
         kept = self._plan_read_entries(spark, version, raw, specs, schema, utc)
         if not kept:
             return spark.createDataFrame([], schema or raw["schema"])
-        df = self._read_files(spark, kept)
+        df = self._read_files(spark, kept, raw)
         if schema is not None:
             df = _align(df, schema, raw.get("column_map"))
         return df.filter(pred)
@@ -2587,7 +2605,7 @@ class ManifestTable:
                 partial.append(e)
         total = full_rows
         if partial:
-            df = self._read_files(spark, partial)
+            df = self._read_files(spark, partial, raw)
             if schema is not None:
                 df = _align(df, schema, cmap)
             total += df.filter(pred).count()
@@ -2841,19 +2859,31 @@ class ManifestTable:
         self,
         spark: SparkSession,
         entries: list[dict],
+        man: dict,
         with_file_path: bool = False,
         with_row_index: bool = False,
     ) -> DataFrame:
-        """Read manifest entries; hive partition columns restored and
-        deletion vectors applied.
+        """Read manifest entries under ``man``'s committed schema; hive
+        partition columns restored and deletion vectors applied. The
+        frame keeps PHYSICAL column names; ``_align`` presents the
+        logical view.
 
         Files are grouped by their write batch (the uuid directory each
-        commit landed under) because partition inference needs a
+        commit landed under) because partition discovery needs a
         basePath whose every child segment is ``key=value`` — the batch
         dir is that root. One scan per batch, unioned; Catalyst still
-        prunes columns/filters into every scan. Batches written before
-        a column was added simply lack it — the union null-fills
-        (additive schema evolution).
+        prunes columns/filters into every scan.
+
+        Each scan's schema comes from the manifest, never the files
+        (``_read_schema``), so building a scan opens no footer and
+        launches no Spark job. Hive partition values come back as raw
+        strings — '19980101' must not become an int, and '000003' read
+        as 3 would lose its leading zeros — and ``_align`` casts them
+        to the committed type, the string-in-the-log / cast-on-read
+        contract Delta uses. Only a manifest without ``fields``
+        (written before the engine recorded them) still infers each
+        batch's schema from its footers, with partition type inference
+        switched off while the reader is built.
 
         Entries carrying deletion vectors (merge-on-read DELETE) have
         those physical row positions removed via an anti-join on
@@ -2880,46 +2910,53 @@ class ManifestTable:
             # anti-join still yields the correct (empty) result and
             # the scan keeps its schema
             entries = live
-        # hive partition values come back as raw strings, never
-        # inference-typed: '19980101' must not become an int, and
-        # '000003' inferred as 3 would silently lose its leading zeros.
-        # snapshot() casts them to the committed schema — the same
-        # string-in-the-log / cast-on-read contract Delta uses.
-        # Inference runs eagerly inside spark.read.parquet(), so the
-        # conf is scoped to reader construction and restored after —
-        # unrelated reads in the same session keep their own setting.
-        inference_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        prev = spark.conf.get(inference_key, None)
-        spark.conf.set(inference_key, "false")
         # shallow-cloned entries carry the SOURCE's absolute data dir
         # as "base"; grouping keys on (root, batch) so a clone-local
         # batch and a foreign batch with a colliding uuid never share
         # a scan or a basePath
         by_batch: dict[tuple[str, str], list[str]] = {}
+        hive: dict[tuple[str, str], dict[str, None]] = {}
         for e in entries:
             first = e["path"].split("/", 1)[0]
             # engine-written files live under a per-commit uuid batch
             # dir; CONVERTED tables adopt files in place, where the
             # first segment may already be a hive ``key=value`` dir
             # (or the file itself, unpartitioned) — then the table
-            # root IS the basePath, or inference would lose that key
+            # root IS the basePath, or discovery would lose that key
             batch = first if "/" in e["path"] and "=" not in first else ""
-            root = e.get("base") or self.data_dir
-            by_batch.setdefault((root, batch), []).append(
-                os.path.join(root, e["path"])
+            key = (e.get("base") or self.data_dir, batch)
+            by_batch.setdefault(key, []).append(os.path.join(key[0], e["path"]))
+            hive.setdefault(key, {}).update(dict.fromkeys(_partition_values(e["path"])))
+        batches = sorted(by_batch)
+
+        def scan(reader, key: tuple[str, str]) -> DataFrame:
+            return reader.option("basePath", os.path.join(*key)).parquet(
+                *[_hadoop_glob_escape(f) for f in by_batch[key]]
             )
-        try:
-            dfs = [
-                spark.read.option("basePath", os.path.join(root, batch)).parquet(
-                    *[_hadoop_glob_escape(f) for f in files]
-                )
-                for (root, batch), files in sorted(by_batch.items())
+
+        schema = self._manifest_schema(man)
+        if schema is not None:
+            read_schemas = [
+                _read_schema(schema, man.get("column_map"), list(hive[k]))
+                for k in batches
             ]
-        finally:
-            if prev is None:
-                spark.conf.unset(inference_key)
-            else:
-                spark.conf.set(inference_key, prev)
+            dfs = [scan(spark.read.schema(rs), k) for rs, k in zip(read_schemas, batches)]
+            dtypes = [[(f.name, f.dataType.simpleString()) for f in rs] for rs in read_schemas]
+        else:
+            # inference runs eagerly inside spark.read.parquet(), so the
+            # conf is scoped to reader construction and restored after —
+            # unrelated reads in the same session keep their own setting
+            inference_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+            prev = spark.conf.get(inference_key, None)
+            spark.conf.set(inference_key, "false")
+            try:
+                dfs = [scan(spark.read, k) for k in batches]
+            finally:
+                if prev is None:
+                    spark.conf.unset(inference_key)
+                else:
+                    spark.conf.set(inference_key, prev)
+            dtypes = [df.dtypes for df in dfs]
         has_dv = any(e.get("dv") or e.get("dv_ref") for e in entries)
         need_file = with_file_path or has_dv
         need_idx = with_row_index or has_dv
@@ -2939,16 +2976,17 @@ class ManifestTable:
             # cast-on-read contract snapshot() applies, just per batch
             # so unionByName never sees a type conflict.
             seen: dict[str, set[str]] = {}
-            for df in dfs:
-                for n, t in df.dtypes:
+            for dt in dtypes:
+                for n, t in dt:
                     seen.setdefault(n, set()).add(t)
             # CONTRACT: a column's dtypes across batches may differ in
             # exactly two sanctioned ways — hive-dir restoration (the
-            # raw-partitioned side is always string) and TYPE WIDENING
-            # (alter_schema(widen=...): old batches keep the narrow
-            # physical type). Both resolve to the WIDEST stored type
-            # on the lossless lattice (_is_widening); anything else is
-            # real drift — fail loudly instead of dying in unionByName.
+            # raw-partitioned side is always string) and, for inferred
+            # scans, TYPE WIDENING (alter_schema(widen=...): old
+            # batches keep the narrow physical type). Both resolve to
+            # the WIDEST stored type on the lossless lattice
+            # (_is_widening); anything else is real drift — fail
+            # loudly instead of dying in unionByName.
             def _widest(ts: set[str]) -> str | None:
                 cand = [t for t in ts if t != "string"]
                 for w in cand:
@@ -2973,17 +3011,11 @@ class ManifestTable:
                     "nor a lossless widening explains the divergence"
                 )
             if fix:
-                dfs = [
-                    df.select(
-                        *[
-                            F.col(n).cast(fix[n]).alias(n)
-                            if n in fix and t != fix[n]
-                            else F.col(n)
-                            for n, t in df.dtypes
-                        ]
-                    )
-                    for df in dfs
+                casts = [
+                    {n: F.col(n).cast(fix[n]) for n, t in dt if fix.get(n, t) != t}
+                    for dt in dtypes
                 ]
+                dfs = [df.withColumns(c) if c else df for df, c in zip(dfs, casts)]
         out = dfs[0]
         for df in dfs[1:]:
             out = out.unionByName(df, allowMissingColumns=True)
@@ -3000,7 +3032,9 @@ class ManifestTable:
                 parts.append(spark.createDataFrame(inline_rows, dv_schema))
             refs = sorted({r for e in entries for r in (e.get("dv_ref") or [])})
             if refs:
-                side = spark.read.parquet(*[os.path.join(self.path, r) for r in refs])
+                side = spark.read.schema("path string, pos bigint").parquet(
+                    *[os.path.join(self.path, r) for r in refs]
+                )
                 parts.append(
                     side.select(
                         F.col("path").alias("__dv_path"), F.col("pos").alias("__dv_pos")
@@ -4130,8 +4164,9 @@ class ManifestTable:
         ``add`` (``{name: spark_type_ddl}``, e.g. ``{"score":
         "double"}``): the committed schema GAINS the fields —
         Delta/Iceberg's metadata-only ADD COLUMN. Existing rows read
-        as NULL (``_align`` NULL-fills columns a file lacks — the same
-        machinery additive append-evolution reads through), so the new
+        as NULL (every scan reads the committed schema, and the parquet
+        reader NULL-fills columns a file lacks — the same machinery
+        additive append-evolution reads through), so the new
         fields are always nullable; later appends/merges carry real
         values. Refuses names that collide case-insensitively with a
         live column, with a drop TOMBSTONE, or with an in-use PHYSICAL
@@ -4838,12 +4873,9 @@ class ManifestTable:
             if candidates:
                 # discovery: which remaining files hold a matching row
                 # (same pushed-predicate scan shape as the CoW DELETE)
-                scan = _null_fill_missing(
-                    _renamed(
-                        self._read_files(spark, candidates, with_file_path=True),
-                        inv,
-                    ),
-                    schema,
+                scan = _renamed(
+                    self._read_files(spark, candidates, man, with_file_path=True),
+                    inv,
                 )
                 hit_files = {
                     _strip_file_scheme(r["__file"])
@@ -4860,9 +4892,9 @@ class ManifestTable:
             blooms = man.get("bloom_cols")
             new_entries: list[dict] = []
             if touched:
-                kept = _null_fill_missing(
-                    _renamed(self._read_files(spark, touched), inv), schema
-                ).filter(~F.coalesce(pred, F.lit(False)))
+                kept = _renamed(self._read_files(spark, touched, man), inv).filter(
+                    ~F.coalesce(pred, F.lit(False))
+                )
                 if schema is not None:
                     kept = _align(kept, schema)
                 new_entries += self._write_data_files(
@@ -5569,7 +5601,7 @@ class ManifestTable:
                 # align the touched rows to the evolved schema first, so a
                 # source-introduced column survives merge_upsert's
                 # align-to-target step
-                target = _align(self._read_files(spark, touched), schema, cmap)
+                target = _align(self._read_files(spark, touched, man), schema, cmap)
                 if clauses is not None:
                     from etl_job_spark.operators.merge import (
                         _ORDERED_BROADCAST_ROWS,
@@ -5812,11 +5844,8 @@ class ManifestTable:
             schema = self._manifest_schema(man)
             cmap = man.get("column_map") or {}
             inv = {p: l for l, p in cmap.items()}
-            scan = _null_fill_missing(
-                _renamed(
-                    self._read_files(spark, candidates, with_file_path=True), inv
-                ),
-                schema,
+            scan = _renamed(
+                self._read_files(spark, candidates, man, with_file_path=True), inv
             )
             hit_files = {
                 _strip_file_scheme(r["__file"])
@@ -5832,9 +5861,9 @@ class ManifestTable:
                 return base  # nothing matched; no new version
 
             partition_by = man["partition_by"]
-            kept = _null_fill_missing(
-                _renamed(self._read_files(spark, touched), inv), schema
-            ).filter(~F.coalesce(pred, F.lit(False)))
+            kept = _renamed(self._read_files(spark, touched, man), inv).filter(
+                ~F.coalesce(pred, F.lit(False))
+            )
             if schema is not None:
                 kept = _align(kept, schema)
             else:
@@ -5977,12 +6006,9 @@ class ManifestTable:
                 # files predate, so e.g. the backfill shape
                 # ``SET c = … WHERE c IS NULL`` resolves
                 inv = {p: l for l, p in cmap.items()}
-                scan = _null_fill_missing(
-                    _renamed(
-                        self._read_files(spark, candidates, with_file_path=True),
-                        inv,
-                    ),
-                    schema,
+                scan = _renamed(
+                    self._read_files(spark, candidates, man, with_file_path=True),
+                    inv,
                 )
                 hit_files = {
                     _strip_file_scheme(r["__file"])
@@ -5998,7 +6024,7 @@ class ManifestTable:
             if not touched:
                 return base  # nothing matched; no new version
 
-            rows = _align(self._read_files(spark, touched), schema, cmap)
+            rows = _align(self._read_files(spark, touched, man), schema, cmap)
             hit = F.coalesce(pred, F.lit(False))
             updated = rows.select(
                 *[
@@ -6079,14 +6105,11 @@ class ManifestTable:
             # disjoint from recorded ones, and counts add exactly.
             # The predicate speaks LOGICAL names; files store PHYSICAL
             # (NULL-filled for metadata-only added columns)
-            scan = _null_fill_missing(
-                _renamed(
-                    self._read_files(
-                        spark, candidates, with_file_path=True, with_row_index=True
-                    ),
-                    {p: l for l, p in (man.get("column_map") or {}).items()},
+            scan = _renamed(
+                self._read_files(
+                    spark, candidates, man, with_file_path=True, with_row_index=True
                 ),
-                self._manifest_schema(man),
+                {p: l for l, p in (man.get("column_map") or {}).items()},
             )
             matched = scan.filter(pred).select(
                 _rel_path_col(self.data_dir).alias("__dv_path"),
@@ -6204,16 +6227,17 @@ class ManifestTable:
             return empty.withColumn("_change", F.lit("upsert"))
         schema = self._manifest_schema(b)
 
-        def _rd(entries: list[dict]) -> DataFrame:
-            df = self._read_files(spark, entries)
-            # files of BOTH versions store physical names; present the
-            # to-version's logical view
+        def _rd(entries: list[dict], man: dict) -> DataFrame:
+            # each side scans under its own version's schema (files only
+            # in one version are covered by that version's fields); both
+            # store physical names — present the to-version's logical view
+            df = self._read_files(spark, entries, man)
             return (
                 _align(df, schema, b.get("column_map")) if schema is not None else df
             )
 
-        old = _rd(only_a) if only_a else None
-        new = _rd(only_b) if only_b else None
+        old = _rd(only_a, a) if only_a else None
+        new = _rd(only_b, b) if only_b else None
         if old is None:
             return new.withColumn("_change", F.lit("upsert"))
         if new is None:
@@ -6393,7 +6417,7 @@ class ManifestTable:
             schema = self._manifest_schema(man)
             new_entries: list[dict] = []
             if rewrite:
-                df = self._read_files(spark, rewrite)
+                df = self._read_files(spark, rewrite, man)
                 if schema is not None:
                     # align to the logical view (applies DVs/evolution),
                     # then back to physical names for the rewrite

@@ -219,3 +219,33 @@ def test_mart_prod_incremental_window(spark, sf_dir, tmp_path):
     # backfill happened: every row with a dim match carries the name
     mart = spark.read.parquet(mart_path)
     assert mart.filter(F.col("medium_scale_nm").isNotNull()).count() > 0
+
+
+def test_iso_day_nulls_every_non_date(spark):
+    df = spark.createDataFrame(
+        [
+            ("20240229",),   # valid leap day
+            ("2024ABCD",),   # 8 chars, not digits
+            ("20241399",),   # digits, month 13
+            ("20230229",),   # digits, no Feb 29 in 2023
+            ("2024011",),    # 7 digits
+            ("120240101",),  # 9 digits the parser would read as year 12024
+            (None,),
+        ],
+        "sale_date string",
+    )
+    got = {
+        r.sale_date: r.day
+        for r in df.select(
+            "sale_date", pipelines._iso_day("sale_date").alias("day")
+        ).collect()
+    }
+    assert got == {
+        "20240229": "2024-02-29",
+        "2024ABCD": None,
+        "20241399": None,
+        "20230229": None,
+        "2024011": None,
+        "120240101": None,
+        None: None,
+    }
