@@ -103,9 +103,12 @@ def format_stdout_line(
        line reads as "dropped_from_bench" round-over-round (PERF_r14
        phantom-dropped embed_ivf_topk/text_quality_score exactly this
        way when the r14 registry grew 108->111);
-    3. drop the informational n_queries/queries_omitted keys;
+    3. drop the informational n_queries key;
     4. only then, as a last resort, evict protected tail entries — an
        unparseable line loses every median, not just the tail.
+
+    Whenever an entry is evicted the line keeps ``queries_omitted``,
+    so a reader can tell a shortened map from a complete one.
     """
     out = {
         "metric": "total_query_seconds",
@@ -138,15 +141,13 @@ def format_stdout_line(
             break
         if stage is None:
             out.pop("n_queries", None)
-            out.pop("queries_omitted", None)
             line = json.dumps(out, separators=(",", ":"))
             continue
         names = list(stage)
         while len(line) > budget and names:
             kept.pop(names.pop())
             out["queries"] = kept
-            if "n_queries" in out:
-                out["queries_omitted"] = len(timings) - len(kept)
+            out["queries_omitted"] = len(timings) - len(kept)
             line = json.dumps(out, separators=(",", ":"))
     print(
         f"# stdout queries map holds {len(kept)} of {len(timings)} "

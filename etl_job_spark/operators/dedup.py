@@ -153,16 +153,26 @@ def signature_bands(
 def lsh_candidate_pairs(
     signatures: DataFrame, band_size: int = 3, num_hashes: int = 12
 ) -> DataFrame:
-    """Self-join the banded signatures on (band, sig): only bucket-mates
-    ever pair, the LSH guarantee that candidate generation is
-    sub-quadratic."""
+    """Pair the bucket-mates of every (band, sig) bucket: only
+    bucket-mates ever pair, the LSH guarantee that candidate generation
+    is sub-quadratic. Each bucket collects its sorted doc ids once and
+    emits the pairs inside it, so the signatures feed ONE aggregation —
+    a self-join on (band, sig) planned the whole MinHash subtree twice
+    (no exchange reuse across the two join sides)."""
     bands = signature_bands(signatures, band_size, num_hashes)
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band", "sig")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "band", "sig")
+    buckets = (
+        bands.groupBy("band", "sig")
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
+        .filter(F.size("ids") > 1)
+    )
+    pairs = F.expr(
+        "flatten(transform(ids, (a, i) -> transform(slice(ids, i + 2, size(ids)),"
+        " b -> struct(a as doc_a, b as doc_b))))"
+    )
     return (
-        a.join(b, ["band", "sig"])
+        buckets.select(F.explode(pairs).alias("p"))
+        .select("p.doc_a", "p.doc_b")
         .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
         .distinct()
     )
 

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_job_spark.sources.catalog import read_parquet, read_parquet_rows
+
 EMBED_SCALE = 1_000_000
 N_PLANES = 8
 
@@ -435,6 +437,20 @@ def _probe_queries(
     )
 
 
+def _probed_locally(
+    spark, queries: DataFrame, cents: list[list[int]], n_probe: int, id_col: str
+) -> tuple[DataFrame, list[int]]:
+    """Evaluate ``_probe_queries`` ONCE for a served search: its
+    |Q|·n_probe rows (the same rows the probe's broadcast moves through
+    the driver anyway) come back as a local relation for the join, and
+    their distinct list ids as the static ``cid IN (…)`` partition
+    filter. The final action then never re-scans the query side, and
+    unprobed lists stay pruned at plan time."""
+    probe = _probe_queries(queries, cents, n_probe, id_col)
+    rows = probe.collect()
+    return spark.createDataFrame(rows, probe.schema), sorted({r.cid for r in rows})
+
+
 def _score_topk(assigned: DataFrame, probed: DataFrame, k: int) -> DataFrame:
     """Exact integer cosine over probed lists only, ranked top-k."""
     scored = (
@@ -530,9 +546,12 @@ def ivf_build_index(
     return cents
 
 
+def _decode_centroids(rows) -> list[list[int]]:
+    return [list(map(int, r.centroid)) for r in sorted(rows, key=lambda r: r.cid)]
+
+
 def _load_centroids(spark, index_path: str) -> list[list[int]]:
-    cent_rows = spark.read.parquet(f"{index_path}/centroids").collect()
-    return [list(map(int, r.centroid)) for r in sorted(cent_rows, key=lambda r: r.cid)]
+    return read_parquet_rows(spark, f"{index_path}/centroids", _decode_centroids)
 
 
 def ivf_append(
@@ -583,7 +602,7 @@ def ivf_index_staleness(spark, index_path: str) -> dict:
     ``_IVF_RETRAIN_APPEND_FRACTION`` of the trained base — past that
     the frozen quantizer's lists no longer reflect the corpus
     distribution and probe recall degrades."""
-    rows = spark.read.parquet(f"{index_path}/meta").collect()
+    rows = read_parquet(spark, f"{index_path}/meta").collect()
     n_base = sum(int(r.n) for r in rows if r.kind == "base")
     n_app = sum(int(r.n) for r in rows if r.kind == "append")
     frac = (n_app / n_base) if n_base else float("inf")
@@ -628,10 +647,13 @@ def ivf_search(
     """Serve a query batch from a persisted IVF index (``ivf_build_index``).
 
     The centroid table (k×dim, bounded) loads driver-side to plan the
-    probes; the distinct probed list ids (≤ |Q|·n_probe, driver-side
-    bounded by the same |Q|-small contract as ``cosine_topk``) become a
-    static ``cid IN (…)`` partition filter, so the scan reads ONLY the
-    probed lists' files — unprobed inverted lists cost zero I/O. Same
+    probes, collected once per index file set (``read_parquet_rows``).
+    The probe is evaluated ONCE: its |Q|·n_probe rows (driver-side
+    bounded by the same |Q|-small contract as ``cosine_topk``) return
+    as a local relation for the join, and their distinct list ids
+    become a static ``cid IN (…)`` partition filter, so the scan reads
+    ONLY the probed lists' files — unprobed inverted lists cost zero
+    I/O, and the final action never re-scans the query side. Same
     output contract and identical results to ``ivf_topk`` with the
     same training parameters.
 
@@ -644,9 +666,8 @@ def ivf_search(
     keeps the advisory-only behavior."""
     _enforce_staleness(spark, index_path, max_staleness)
     cents = _load_centroids(spark, index_path)
-    probed = _probe_queries(queries, cents, n_probe, id_col)
-    probe_cids = sorted({r.cid for r in probed.select("cid").distinct().collect()})
-    assigned = spark.read.parquet(f"{index_path}/assignment").filter(
+    probed, probe_cids = _probed_locally(spark, queries, cents, n_probe, id_col)
+    assigned = read_parquet(spark, f"{index_path}/assignment").filter(
         F.col("cid").isin(probe_cids)
     )
     return _score_topk(assigned, probed, k)
@@ -798,7 +819,7 @@ def _append_layout_codes(
     legacy index therefore keeps receiving ``array<int>`` files; only
     packed-layout indexes receive packed appends. (Rebuilding the
     index migrates a legacy one to the packed layout.)"""
-    existing = spark.read.parquet(f"{index_path}/codes").schema.names
+    existing = read_parquet(spark, f"{index_path}/codes").schema.names
     if "packed" in existing:
         return _packed_codes(df, books)
     return df
@@ -1007,12 +1028,15 @@ def pq_build_index(
     return books
 
 
-def _load_books(spark, index_path: str) -> list[list[list[int]]]:
-    rows = spark.read.parquet(f"{index_path}/codebooks").collect()
+def _decode_books(rows) -> list[list[list[int]]]:
     by_j: dict[int, dict[int, list[int]]] = {}
     for r in rows:
         by_j.setdefault(int(r.j), {})[int(r.cid)] = list(map(int, r.centroid))
     return [[by_j[j][c] for c in sorted(by_j[j])] for j in sorted(by_j)]
+
+
+def _load_books(spark, index_path: str) -> list[list[list[int]]]:
+    return read_parquet_rows(spark, f"{index_path}/codebooks", _decode_books)
 
 
 def pq_append(
@@ -1070,7 +1094,7 @@ def pq_search(
         raise ValueError(f"rerank={rerank} must be >= k={k}")
     _enforce_staleness(spark, index_path, max_staleness)
     books = _load_books(spark, index_path)
-    codes = _unpacked_codes(spark.read.parquet(f"{index_path}/codes"), books)
+    codes = _unpacked_codes(read_parquet(spark, f"{index_path}/codes"), books)
     short = _pq_score_topk(codes, queries, books, rerank or k, id_col)
     if rerank is None:
         return short
@@ -1208,7 +1232,10 @@ def ivfpq_search(
     query's ``n_probe`` nearest lists, build one RESIDUAL distance
     table per (query, probed list) — the residual differs per list,
     so each probed pair carries its own m×ksub table — then ADC-score
-    only the pruned lists' codes. ``rerank``/``rerank_vectors`` refine
+    only the pruned lists' codes. As in ``ivf_search``, the probe is
+    evaluated once: its rows feed both the static ``cid IN (…)``
+    partition filter and the per-(query, list) tables, from a local
+    relation. ``rerank``/``rerank_vectors`` refine
     with exact L2 as in ``pq_search``. Output (q_id, n_id, adist, rk),
     or ``l2_topk``'s (q_id, n_id, d2, rk) when re-ranked.
     ``max_staleness`` enforces the append ledger like ``ivf_search``."""
@@ -1220,7 +1247,7 @@ def ivfpq_search(
     cents = _load_centroids(spark, index_path)
     books = _load_books(spark, index_path)
     sub = len(books[0][0])
-    probed = _probe_queries(queries, cents, n_probe, id_col)
+    probed, probe_cids = _probed_locally(spark, queries, cents, n_probe, id_col)
     # query-side attachments ride the broadcast frame: |Q|·n_probe
     # rows never amortize a k×dim / m×ksub×sub literal plan compile
     pq = (
@@ -1234,9 +1261,8 @@ def ivfpq_search(
     pq = _with_books(pq, books, force_frame=True).select(
         "q_id", "cid", F.expr(_pq_dtab_expr(sub)).alias("dtab")
     )
-    probe_cids = sorted({r.cid for r in probed.select("cid").distinct().collect()})
     codes = _unpacked_codes(
-        spark.read.parquet(f"{index_path}/codes").filter(
+        read_parquet(spark, f"{index_path}/codes").filter(
             F.col("cid").isin(probe_cids)
         ),
         books,

@@ -202,19 +202,26 @@ SLOW_TIER = frozenset(
 )
 
 
+def slow_tier_key(nodeid: str) -> str | None:
+    """``tests/test_x.py::test_y[param]`` -> ``test_x.py::test_y``, the
+    form ``SLOW_TIER`` names tests in (None for a bare file path)."""
+    base = nodeid.split("::", 1)
+    if len(base) != 2:
+        return None
+    return os.path.basename(base[0]) + "::" + base[1].split("[")[0]
+
+
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("SPARK_GRAFT_RUN_SLOW") == "1":
         return
+    # a test named by nodeid on the command line runs even if slow
+    named = {slow_tier_key(a) for a in config.args}
     skip = pytest.mark.skip(
         reason="slow tier — opt in with SPARK_GRAFT_RUN_SLOW=1"
     )
     for item in items:
-        # nodeid: tests/test_x.py::test_y[param] -> test_x.py::test_y
-        base = item.nodeid.split("::", 1)
-        if len(base) != 2:
-            continue
-        key = os.path.basename(base[0]) + "::" + base[1].split("[")[0]
-        if key in SLOW_TIER:
+        key = slow_tier_key(item.nodeid)
+        if key in SLOW_TIER and key not in named:
             item.add_marker(skip)
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

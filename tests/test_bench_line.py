@@ -66,3 +66,16 @@ def test_small_registry_keeps_full_precision():
     assert parsed["metric"] == "total_query_seconds"
     assert parsed["unit"] == "sec"
     assert parsed["sf"] == 0.01
+
+
+def test_last_resort_eviction_keeps_omission_marker():
+    # a budget no protected-only map fits forces stage 4: protected
+    # entries go, and the line must still say how many are missing
+    timings = {name: 12.345 for name in sorted(bench.PRINTED_CONTRACT)}
+    line = bench.format_stdout_line(timings, sum(timings.values()), 0.1, budget=600)
+    assert len(line) <= 600
+    parsed = json.loads(line)
+    kept = set(parsed["queries"])
+    assert kept < set(timings)
+    assert parsed["queries_omitted"] == len(timings) - len(kept)
+    assert "n_queries" not in parsed

@@ -12,7 +12,9 @@ from pyspark.sql import functions as F
 
 from etl_job_spark.operators import similarity
 
+from tests.test_ivf import PARTS, STATIC_CID
 from tests.test_pq import _clustered
+from tools.explain import scan_metrics
 
 
 def _emb(spark, sf_dir):
@@ -39,10 +41,10 @@ def test_search_scans_only_probed_lists(spark, sf_dir, tmp_path):
     import io
 
     emb = _emb(spark, sf_dir)
-    # a single query with few probes: the probed-list filter must reach
-    # the codes scan as a partition filter (inputFiles() can't witness
-    # pruning — it lists the unfiltered relation — so the plan is the
-    # evidence, same as the IVF pin)
+    # a single query with few probes: the probed-list filter reaches the
+    # codes scan as a static partition filter, and the executed scan
+    # read exactly the probed lists (the plan text alone cannot tell a
+    # static filter from dynamicpruningexpression(true), which reads all)
     one_q = emb.filter(F.col("vec_id") == 0)
     idx = str(tmp_path / "idx")
     similarity.ivfpq_build_index(emb, idx, n_centroids=16, m=4, ksub=16, n_iters=2)
@@ -51,7 +53,9 @@ def test_search_scans_only_probed_lists(spark, sf_dir, tmp_path):
     with contextlib.redirect_stdout(buf):
         res.explain(mode="formatted")
     pf_lines = [ln for ln in buf.getvalue().splitlines() if "PartitionFilters" in ln]
-    assert pf_lines and "cid" in pf_lines[0] and "[]" not in pf_lines[0]
+    assert pf_lines and all(STATIC_CID.search(ln) for ln in pf_lines), pf_lines
+    res.collect()
+    assert [m[PARTS] for _, m in scan_metrics(res) if PARTS in m] == [2]
 
 
 def test_clustered_corpus_purity_and_reranked_recall(spark, tmp_path):
